@@ -7,10 +7,12 @@ Reference topology (dags/s3-etl-wallet-csv.py:247-248):
 
 Engine mapping: the sensor becomes either the streaming file source
 (streaming/ops.read_file_stream) or, for a one-shot run, a list-and-assert
-stage; object copy becomes a zone write (a distributed write IS the copy);
-the pandas parse becomes normalize_dates; the feature job is
-wallet_features; the DW load is write_jdbc (optional — skipped when no
-warehouse URL is configured, e.g. in this container).
+stage; object copy becomes ZoneStore.copy (a byte copy, so processing holds
+the landing file unchanged); the pandas parse becomes normalize_dates; the
+feature job is wallet_features; the DW load is write_jdbc (optional —
+skipped when no warehouse URL is configured). The stages keep the
+reference's diamond: after parse_curated, features_serving runs
+concurrently with the delete_processing >> load_dw branch.
 """
 
 from __future__ import annotations
@@ -48,25 +50,25 @@ def wallet_flow(
     uses 300 s, dags/s3-etl-wallet-csv.py:38-39).
     """
     pipe = Pipeline()
+    retry = {"retries": retries, "retry_delay_s": retry_delay_s}
     prefix = key.rsplit("/", 1)[0] + "/" if "/" in key else ""
 
-    @pipe.stage("sense", retries=retries, retry_delay_s=retry_delay_s)
+    @pipe.stage("sense", **retry)
     def sense(ctx: dict[str, Any]):
         keys = store.list_keys("landing", prefix)
         if not keys:
             raise FileNotFoundError(f"no input under landing/{prefix}")
         return keys
 
-    @pipe.stage("promote_processing", retries=retries, retry_delay_s=retry_delay_s)
+    @pipe.stage("promote_processing", **retry)
     def promote_processing(ctx: dict[str, Any]):
-        raw = read_wallet_csv(spark, store.path("landing", key))
-        return store.promote(raw, "processing", key, fmt="csv")
+        return store.copy("landing", "processing", key)
 
-    @pipe.stage("delete_landing", retries=retries, retry_delay_s=retry_delay_s)
+    @pipe.stage("delete_landing", **retry)
     def delete_landing(ctx: dict[str, Any]):
         return store.delete("landing", key)
 
-    @pipe.stage("parse_curated", retries=retries, retry_delay_s=retry_delay_s)
+    @pipe.stage("parse_curated", **retry)
     def parse_curated(ctx: dict[str, Any]):
         # The reference's pandas leg: re-header (header=1 row drop) + date
         # reformat dd/MM/yyyy → ISO, landing CSV → curated. Curated is
@@ -75,26 +77,30 @@ def wallet_flow(
             spark, store.path("processing", key), skip_first_data_row=skip_first_data_row
         )
         curated = normalize_dates(raw)
+        ctx["curated_schema"] = curated.schema
         return store.promote(curated, "curated", "cyrela/wallet", fmt="parquet")
 
-    @pipe.stage("delete_processing", retries=retries, retry_delay_s=retry_delay_s)
+    def read_curated(ctx: dict[str, Any]):
+        # The schema parse_curated wrote: Spark then skips the job that
+        # infers it from the parquet footers.
+        return spark.read.schema(ctx["curated_schema"]).parquet(ctx["parse_curated"])
+
+    @pipe.stage("delete_processing", **retry, after=("parse_curated",))
     def delete_processing(ctx: dict[str, Any]):
         return store.delete("processing", key)
 
-    @pipe.stage("features_serving", retries=retries, retry_delay_s=retry_delay_s)
+    @pipe.stage("features_serving", **retry, after=("parse_curated",))
     def features_serving(ctx: dict[str, Any]):
-        curated = spark.read.parquet(ctx["parse_curated"])
-        feats = wallet_features(curated)
+        feats = wallet_features(read_curated(ctx))
         target = store.path("serving", "cyrela/wallet")
         write_csv(feats, target)
         return target
 
     if jdbc_url is not None:
 
-        @pipe.stage("load_dw", retries=retries, retry_delay_s=retry_delay_s)
+        @pipe.stage("load_dw", **retry, after=("delete_processing",))
         def load_dw(ctx: dict[str, Any]):
-            curated = spark.read.parquet(ctx["parse_curated"])
-            write_jdbc(curated, jdbc_url, jdbc_table)
+            write_jdbc(read_curated(ctx), jdbc_url, jdbc_table)
             return jdbc_table
 
     return pipe

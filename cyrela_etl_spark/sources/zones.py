@@ -3,10 +3,12 @@
 The reference moves objects between MinIO buckets
 landing → processing → curated → serving with copy/delete operators
 (reference dags/s3-etl-wallet-csv.py:24-27,161-176,196-201). Here a zone is
-just a path prefix (local dir, s3a://, hdfs:// — anything Hadoop FS speaks);
-promotion = reading from one zone and writing to the next, optionally
-removing consumed inputs. The S3A connector replaces the MinIO SDK; no
-byte-copy operator exists because a distributed write IS the copy.
+just a path prefix (local dir, s3a://, hdfs:// — anything Hadoop FS speaks),
+and the S3A connector replaces the MinIO SDK. Two moves exist: ``copy``
+duplicates an object's bytes into the next zone unchanged (the reference's
+S3CopyObjectOperator — landing → processing keeps the file as it arrived),
+and ``promote`` reads from one zone and writes a transformed DataFrame to
+the next (curated, serving). Consumed inputs are removed with ``delete``.
 """
 
 from __future__ import annotations
@@ -90,6 +92,19 @@ class ZoneStore:
         dags/s3-etl-wallet-csv.py:171-176,196-201)."""
         fs, jvm = self._fs()
         return bool(fs.delete(jvm.org.apache.hadoop.fs.Path(self.path(zone, key)), True))
+
+    def copy(self, from_zone: str, to_zone: str, key: str) -> str:
+        """Byte-copy one object into another zone, keeping the source
+        (reference S3CopyObjectOperator, dags/s3-etl-wallet-csv.py:161-168);
+        returns the target path. Driver-side Hadoop FileUtil.copy: no Spark
+        job, and the target stays one file."""
+        fs, jvm = self._fs()
+        src, dst = self.path(from_zone, key), self.path(to_zone, key)
+        hpath = jvm.org.apache.hadoop.fs.Path
+        conf = self.spark._jsc.hadoopConfiguration()
+        if not jvm.org.apache.hadoop.fs.FileUtil.copy(fs, hpath(src), fs, hpath(dst), False, conf):
+            raise IOError(f"copy {src!r} -> {dst!r} returned false")
+        return dst
 
     # -- promotion ----------------------------------------------------------
     def promote(

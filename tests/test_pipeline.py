@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+
 import pytest
 
 from cyrela_etl_spark.flows import wallet_flow
@@ -84,6 +88,171 @@ def test_runner_context_passes_values():
     assert results[-1].value == 42
 
 
+def test_dag_sibling_stages_run_concurrently():
+    pipe = Pipeline()
+    pipe.stage("root")(lambda ctx: None)
+    for name in ("left", "right"):
+        pipe.stage(name, after=("root",))(lambda ctx: time.sleep(0.3))
+
+    t0 = time.perf_counter()
+    pipe.run()
+    assert time.perf_counter() - t0 < 0.5  # serial would take >= 0.6 s
+
+
+def test_dag_stage_waits_for_all_of_its_after_stages():
+    pipe = Pipeline()
+    ended: dict[str, float] = {}
+
+    def sleeper(name, s):
+        def body(ctx):
+            time.sleep(s)
+            ended[name] = time.perf_counter()
+
+        return body
+
+    pipe.stage("slow", after=())(sleeper("slow", 0.3))
+    pipe.stage("fast", after=())(sleeper("fast", 0.05))
+    pipe.stage("join", after=("slow", "fast"))(lambda ctx: time.perf_counter())
+
+    results = {r.name: r for r in pipe.run()}
+    assert results["join"].value >= max(ended["slow"], ended["fast"])
+
+
+def test_dag_failed_branch_lets_sibling_finish_and_skips_dependents():
+    pipe = Pipeline()
+    ran = []
+
+    @pipe.stage("root")
+    def root(ctx):
+        ran.append("root")
+
+    @pipe.stage("bad", retries=0, after=("root",))
+    def bad(ctx):
+        ran.append("bad")
+        raise RuntimeError("permanent")
+
+    @pipe.stage("good", after=("root",))
+    def good(ctx):
+        time.sleep(0.2)
+        ran.append("good")
+
+    pipe.stage("after_bad", after=("bad",))(lambda ctx: ran.append("after_bad"))
+    pipe.stage("after_good", after=("good",))(lambda ctx: ran.append("after_good"))
+
+    with pytest.raises(PipelineError) as ei:
+        pipe.run()
+    assert ei.value.stage == "bad"
+    assert sorted(ran) == ["bad", "good", "root"]  # no stage starts after a failure
+
+
+def test_dag_results_come_back_in_declaration_order():
+    pipe = Pipeline()
+    pipe.stage("slow", after=())(lambda ctx: time.sleep(0.2))
+    pipe.stage("fast", after=())(lambda ctx: None)
+    pipe.stage("tail", after=("fast",))(lambda ctx: None)
+    assert [r.name for r in pipe.run()] == ["slow", "fast", "tail"]
+
+
+def test_dag_after_must_name_an_earlier_stage():
+    pipe = Pipeline()
+    pipe.stage("a")(lambda ctx: None)
+    with pytest.raises(ValueError, match="not declared"):
+        pipe.stage("b", after=("nope",))(lambda ctx: None)
+    with pytest.raises(ValueError, match="not declared"):  # forward reference
+        pipe.stage("c", after=("d",))(lambda ctx: None)
+    with pytest.raises(ValueError, match="twice"):
+        pipe.stage("a")(lambda ctx: None)
+    assert [st.name for st in pipe.stages] == ["a"]
+
+
+def _run_bounded(pipe, timeout_s=10.0):
+    """pipe.run() in a thread joined with a timeout, so a scheduler
+    deadlock fails the test instead of hanging it; returns (results, error)."""
+    out = {}
+
+    def go():
+        try:
+            out["results"] = pipe.run()
+        except BaseException as e:  # noqa: BLE001 — handed back to the test
+            out["error"] = e
+
+    t = threading.Thread(target=go, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), "Pipeline.run did not return"
+    return out.get("results"), out.get("error")
+
+
+def test_dag_stage_exiting_fails_the_run_instead_of_hanging_it():
+    pipe = Pipeline()
+    pipe.stage("root")(lambda ctx: None)
+    pipe.stage("exits", after=("root",))(lambda ctx: sys.exit(3))
+    pipe.stage("after_exit", after=("exits",))(lambda ctx: None)
+    _, err = _run_bounded(pipe)
+    assert isinstance(err, PipelineError) and err.stage == "exits"
+    assert isinstance(err.cause, SystemExit)
+
+
+def test_dag_wide_fan_out_runs_every_stage_once_under_thread_switching():
+    runs: dict[str, int] = {}
+    lock = threading.Lock()
+
+    def body(name):
+        def run(ctx):
+            with lock:
+                runs[name] = runs.get(name, 0) + 1
+            return name
+
+        return run
+
+    pipe = Pipeline()
+    pipe.stage("root")(body("root"))
+    branches = [f"b{i}" for i in range(32)]  # far more workers than cores
+    for b in branches:
+        pipe.stage(b, after=("root",))(body(b))
+    pipe.stage("join", after=tuple(branches))(lambda ctx: sorted(ctx[b] for b in branches))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        results, err = _run_bounded(pipe)
+    finally:
+        sys.setswitchinterval(old)
+    assert err is None
+    assert runs == {name: 1 for name in ["root", *branches]}
+    assert [r.name for r in results] == ["root", *branches, "join"]
+    assert results[-1].value == sorted(branches)
+
+
+def test_dag_branch_stage_sees_the_callers_job_group(spark):
+    """Branch stages inherit the caller's job group, and a group one branch
+    sets stays in that branch: not in its sibling, not in the caller."""
+    sc = spark.sparkContext
+    left_set_group = threading.Event()
+
+    def left(ctx):
+        sc.setJobGroup("left-own-group", "set inside a branch")
+        left_set_group.set()
+        return spark.range(3).count()
+
+    def right(ctx):
+        assert left_set_group.wait(10)
+        return sc.getLocalProperty("spark.jobGroup.id")
+
+    pipe = Pipeline()
+    pipe.stage("root")(lambda ctx: None)
+    pipe.stage("left", after=("root",))(left)
+    pipe.stage("right", after=("root",))(right)
+    sc.setJobGroup("dag-caller-group", "pipeline test")
+    try:
+        results = {r.name: r.value for r in pipe.run()}
+        caller_group = sc.getLocalProperty("spark.jobGroup.id")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert results == {"root": None, "left": 3, "right": "dag-caller-group"}
+    assert caller_group == "dag-caller-group"
+
+
 def test_wallet_flow_end_to_end(spark, store, tmp_path):
     pipe = wallet_flow(spark, store, skip_first_data_row=True)
     results = pipe.run()
@@ -110,6 +279,30 @@ def test_wallet_flow_end_to_end(spark, store, tmp_path):
     assert float(by_emp[40]["p_empresa"]) == 1.0  # 40 / max(40)
     assert int(by_emp[20]["p_marca"]) == 2  # Living
     assert [int(by_emp[e]["p_dias_atraso_category"]) for e in (20, 30, 40)] == [1, 2, 0]
+
+
+def test_wallet_flow_landing_csv_spanning_several_splits(spark, tmp_path):
+    """A landing CSV read as several splits still yields one processing
+    file, so the header=1 drop applies: curated holds N-1 rows without the
+    first data row. Runs on its own session so the small split size does
+    not leak into the shared session's conf."""
+    session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    rows = [[str(i), "Cyrela", f"E{i}", f"CLIENTE Y{i}", "", "1", "1", str(i), "15/03/2019",
+             "20/04/2019", "7", "1000.50", "01/06/2020", "0", "0", "-10", "500.25", "250.10",
+             "", "", "", "", "2000.00"] for i in range(1, 61)]
+    landing = tmp_path / "landing" / "cyrela"
+    landing.mkdir(parents=True)
+    csv = landing / "wallet-data.csv"
+    csv.write_text("\n".join([",".join(WALLET_COLUMNS)] + [",".join(r) for r in rows]) + "\n")
+    assert csv.stat().st_size > 4 * 1024  # several 1 KB splits
+
+    wallet_flow(session, ZoneStore(session, str(tmp_path))).run()
+
+    curated = session.read.parquet(str(tmp_path / "curated" / "cyrela" / "wallet")).toPandas()
+    assert len(curated) == len(rows) - 1
+    assert "CLIENTE Y1" not in set(curated["cliente"])
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") != "1024"
 
 
 def test_zone_table_overwrite_append_lifecycle(spark, sf_dir, tmp_path):

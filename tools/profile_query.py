@@ -1,7 +1,8 @@
 """Per-query job/stage profiler: runs bench's exact timed action for the
 given queries under the engine session with the Spark event log enabled,
 then decomposes each query's wall time into its Spark jobs (description,
-duration, task time) plus non-job driver gaps.
+duration, task time) plus driver gaps: the time during which no job ran,
+with concurrent jobs counted once.
 
 Usage:
     python tools/profile_query.py <name> [name...]
@@ -19,6 +20,22 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def idle_gaps(t0: float, t1: float, jobs: list[tuple[float, float]]) -> tuple[float, list[float]]:
+    """Driver time of the query span ``[t0, t1]`` against its Spark jobs'
+    ``(start, end)`` intervals, given in start order. Returns
+    ``(gap, per_job)``: ``gap`` is the wall minus the union of the job
+    intervals clipped to the span, and ``per_job[i]`` is how long no job ran
+    just before job ``i`` (0 when it starts while an earlier one still
+    runs). Overlapping jobs count once, so neither is ever negative."""
+    covered_to = t0  # running maximum of the clipped job end times
+    per_job = []
+    for start, end in jobs:
+        start = min(max(start, t0), t1)
+        per_job.append(max(0.0, start - covered_to))
+        covered_to = max(covered_to, min(end, t1))
+    return sum(per_job) + (t1 - covered_to), per_job
 
 
 def main() -> None:
@@ -137,12 +154,10 @@ def main() -> None:
         ]
         mine.sort(key=lambda j: j["t0"])
         jsum = sum(j["t1"] - j["t0"] for j in mine)
+        driver_gap, gaps = idle_gaps(t0, t1, [(j["t0"], j["t1"]) for j in mine])
         print(f"\n=== {name}: wall {wall:.2f}s, {len(mine)} jobs "
-              f"(sum {jsum:.2f}s, driver/gap {wall - jsum:.2f}s)")
-        prev_end = t0
-        for j in mine:
-            gap = j["t0"] - prev_end
-            prev_end = j["t1"]
+              f"(sum {jsum:.2f}s, driver/gap {driver_gap:.2f}s)")
+        for j, gap in zip(mine, gaps):
             stages = [
                 (sid, stage_info.get(sid)) for sid in j["stages"]
                 if sid in stage_info
