@@ -21,16 +21,11 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from cyrela_etl_spark.operators.wallet import wallet_features
+from cyrela_etl_spark.operators.wallet import normalize_dates, wallet_features
 from cyrela_etl_spark.pipeline import Pipeline
 from cyrela_etl_spark.sources.csv import read_wallet_csv, write_csv
 from cyrela_etl_spark.sources.jdbc import write_jdbc
 from cyrela_etl_spark.sources.zones import ZoneStore
-
-try:  # wallet normalize_dates lives with the operator chain
-    from cyrela_etl_spark.operators.wallet import normalize_dates
-except ImportError:  # pragma: no cover
-    normalize_dates = None
 
 
 def wallet_flow(

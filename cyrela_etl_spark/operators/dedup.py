@@ -561,8 +561,10 @@ def connected_components(
 # re-optimization turns each round's one action into ~6 stage-
 # materialization jobs, and the loop's cost at test SF is driver latency
 # (profiled: 32 jobs, 1.5 s of inter-job gaps on a 3 s wall). Interleaved
-# A/B at sf0.1 (tools/ab_conf.py, identical checksums): AQE off won all 5
-# paired reps on dedup_components, medians 2.525 vs 2.704 s. The EDGE
+# A/B at sf0.1 (OPTIMIZATION_r18.md, identical checksums): AQE off won all
+# 5 paired reps on dedup_components, medians 2.525 vs 2.704 s; re-run with
+# `tools/ab.py dedup_components shipped
+# patch:cyrela_etl_spark.operators.dedup._LOOP_ROUNDS_DISABLE_AQE=False`. The EDGE
 # BUILD (self-joins over the corpus) stays under the caller's AQE — only
 # the rounds over the already-persisted edges run static. Flag, not
 # hardcode, so the A/B stays re-runnable.

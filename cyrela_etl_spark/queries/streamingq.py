@@ -61,7 +61,9 @@ def _drain(spark: SparkSession, mk, *args, **kwargs) -> DataFrame:
     # docstring's "size to the stream's key cardinality" rule lands on.
     # r18: stream_dedup_expiry — the one r17 inheritor shipped without
     # its own A/B (VERDICT r17 item 3) — measured at widths 4/8/16/32
-    # (tools/ab_drain_width.py, interleaved, identical checksums):
+    # (interleaved, identical checksums; re-run with `tools/ab.py
+    # stream_dedup_expiry env:SPARK_GRAFT_STREAM_DRAIN_PARTITIONS=4
+    # env:SPARK_GRAFT_STREAM_DRAIN_PARTITIONS=8`):
     # 2.41 / 2.65 / 3.69 / 4.48 s medians. Width 4 wins for it too; the
     # driver's 6.04 s r17 row was host weather (same HEAD re-read 1.97 s
     # in a stable-probe run). No per-query override needed.
@@ -442,7 +444,7 @@ FROM ranked WHERE rn = 1
 # arrival directory is a PURE function of the sf_dir's events table and the
 # construction version below, but building it costs a coalesce(1) write of
 # the full events table — ~75% of the query's bench wall, 3x per bench
-# (tools/ab_stream_drift.py decomposition). Cache it per (sf_dir, version)
+# (NOTES.md, round 15 streaming-drain drift). Cache it per (sf_dir, version)
 # for the life of the process so bench reps 2..N (and any same-session
 # re-run) measure the DRAIN, not write weather. Semantics are unchanged:
 # every call still drains the identical arrival sequence (mtimes are pinned

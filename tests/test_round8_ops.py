@@ -355,6 +355,7 @@ def test_shuffle_width_invariance_representatives(spark, sf_dir):
     reg = load_all()
     names = ["vector_ivf_pq_topk", "events_power_pareto", "text_zipf_fit"]
     results = {}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
     for parts in ("5", "17"):
         spark.conf.set("spark.sql.shuffle.partitions", parts)
         try:
@@ -362,7 +363,7 @@ def test_shuffle_width_invariance_representatives(spark, sf_dir):
                 rows = sorted(map(str, reg[n][0](spark, sf_dir).collect()))
                 results.setdefault(n, []).append(rows)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            spark.conf.set("spark.sql.shuffle.partitions", old)
             spark.catalog.clearCache()
     for n, (a, b) in results.items():
         assert a == b, f"{n} changed results under a different shuffle width"

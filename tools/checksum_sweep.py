@@ -25,8 +25,7 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import functions as F
-
+    from ab import checksum
     from cyrela_etl_spark.queries import load_all
     from cyrela_etl_spark.session import get_spark
 
@@ -41,13 +40,10 @@ def main() -> None:
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("ck"),
-            ).collect()[0]
+            n, ck = checksum(df)
             out[name] = {
-                "n": row["n"],
-                "ck": str(row["ck"]),
+                "n": n,
+                "ck": str(ck),
                 "cols": df.columns,
                 "sec": round(time.perf_counter() - t0, 2),
             }
